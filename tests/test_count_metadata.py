@@ -69,7 +69,7 @@ def test_count_served_from_manifest_zero_files(eng):
     assert out.first().n == 37
     assert out.schema["n"].dataType.simpleString() == "bigint"
     # the audit marker distinguishes stats-served from scanned
-    qe = eng._execute("SELECT count(*) AS n FROM db.t", "ops")
+    qe, _ = eng._execute("SELECT count(*) AS n FROM db.t", "ops")
     assert "COUNT_STATS:db.t" in qe.filters_applied
     # unaliased: the column name matches what the scan path produces
     assert eng.sql("SELECT count(*) FROM db.t", "ops").columns == [

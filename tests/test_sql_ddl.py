@@ -307,10 +307,10 @@ def test_grant_by_sql_not_served_from_stale_reuse_cache(eng, spark, tmp_path):
     ).write.mode("overwrite").partitionBy("yr").parquet(loc)
     eng.sql("GRANT SELECT ON sales_db.sales TO a5", "ops")
     q = "SELECT count(*) AS n FROM sales_db.sales"
-    first = eng._execute(q, "a5", reuse_max_age=3600)
+    first, _ = eng._execute(q, "a5", reuse_max_age=3600)
     assert first.state.name == "SUCCEEDED"
     eng.sql("REVOKE ON sales_db.sales FROM a5", "ops")
-    second = eng._execute(q, "a5", reuse_max_age=3600)
+    second, _ = eng._execute(q, "a5", reuse_max_age=3600)
     assert second.reused_from is None
     assert second.state.name == "FAILED"
 

@@ -33,7 +33,9 @@ from .engine import (
     Engine,
     QueryCapExceededError,
     QueryExecution,
+    QueryFailedError,
     QueryState,
+    ResultNotRetainedError,
     governed_sql_guard,
 )
 from .session import get_spark
@@ -52,7 +54,9 @@ __all__ = [
     "Principal",
     "QueryExecution",
     "QueryCapExceededError",
+    "QueryFailedError",
     "QueryState",
+    "ResultNotRetainedError",
     "TableDef",
     "get_spark",
 ]

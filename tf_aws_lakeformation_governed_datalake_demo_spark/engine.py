@@ -53,20 +53,35 @@ class QueryCapExceededError(RuntimeError):
     file set costs, the ceiling of Athena's metered number."""
 
 
+class QueryFailedError(RuntimeError):
+    """The query did not succeed (FAILED or CANCELLED), so it has no
+    result set; the message carries its ``state_change_reason``."""
+
+
+class ResultNotRetainedError(RuntimeError):
+    """The query succeeded, but its result DataFrame was handed to the
+    caller (``Engine.sql``) instead of being pinned for later fetches.
+    Only :meth:`Engine.submit` pins a result for ``results()`` /
+    ``results_page()``, until :meth:`Engine.cleanup_results`."""
+
+
 @dataclass
 class QueryExecution:
+    """One execution's METADATA — the Athena query-history record
+    (validate.sh:92-110): id, state, reason, what it touched. It never
+    holds the result DataFrame: a frame keeps its whole plan live in
+    the JVM, so a history of frames grows with every query ever run.
+    Result rows are fetched by query id from what :meth:`Engine.submit`
+    pinned (the results-bucket analog, main.tf:504-510)."""
+
     query_id: str
     sql: str
     principal: str | None
     state: QueryState = QueryState.QUEUED
     state_change_reason: str | None = None
-    result: DataFrame | None = None
     results_path: str | None = None
     tables: list[str] = field(default_factory=list)
     filters_applied: list[str] = field(default_factory=list)
-    # lazily-pinned snapshot that all result pages read from (never the
-    # live plan — see Engine.results_page)
-    page_source: DataFrame | None = None
     # query id this execution's result was reused from (L7 result reuse)
     reused_from: str | None = None
     # planned scan bytes (Athena DataScannedInBytes analog) — computed
@@ -74,21 +89,28 @@ class QueryExecution:
     bytes_scanned: int | None = None
 
 
-
 def _local_df(spark, rows, schema):
-    """Driver-local result rows as a ONE-partition DataFrame.
-
-    A plain ``createDataFrame`` parallelizes over defaultParallelism
-    (32) slices, so a consumer's ``.first()``/``noop`` write pays a
-    take ramp / 32 near-empty tasks hunting rows that live on the
-    driver (the round-14 bisect of the lake_multi_table_publish
-    elevation: the metadata-served count cost MORE jobs than the scan
-    it replaced). Statement results are O(rows already built on the
-    driver) -- one partition is the right physical shape.
+    """Driver-built result rows (statement metrics, SHOW/DESCRIBE,
+    metadata-served counts) as a ``LocalRelation``: no partition, no
+    job. The rows ship to the JVM once as an Arrow table with the
+    declared schema, so collecting them runs no Spark job — a frame
+    over ``parallelize(rows)`` is a Python RDD, and even its one-row
+    ``.first()`` paid a job with a Python-worker task.
     """
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(list(rows), 1), schema
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    columns = zip(*rows) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
     )
+    return spark.createDataFrame(table, schema)
 
 
 class Engine:
@@ -97,6 +119,15 @@ class Engine:
     ``results_dir`` mirrors the Athena results bucket (main.tf:504-510):
     when set, every successful query's result set is persisted as headered
     CSV under ``<results_dir>/<query_id>/``.
+
+    Result ownership: ``executions`` is a metadata-only history. Whoever
+    receives a result DataFrame owns it — :meth:`sql` and
+    :meth:`sql_script` hand the frame to their caller and retain
+    nothing. A frame stays pinned only where an API promises a later
+    fetch: :meth:`submit` pins it for :meth:`results` /
+    :meth:`results_page` until :meth:`cleanup_results`, and an opt-in
+    ``reuse_max_age`` cache entry holds its producer's frame so a later
+    reuse can serve it.
     """
 
     def __init__(
@@ -119,6 +150,11 @@ class Engine:
         # exactly as Athena's metering does.
         self.bytes_scanned_cutoff_per_query = bytes_scanned_cutoff_per_query
         self.executions: dict[str, QueryExecution] = {}
+        # frames pinned by submit() for results()/results_page(), and
+        # the localCheckpoint each one's pages read from (created on
+        # first fetch); both released by cleanup_results()
+        self._results: dict[str, DataFrame] = {}
+        self._page_sources: dict[str, DataFrame] = {}
         self._prepared: dict[str, str] = {}
         # L5 — workgroup metrics counters (CloudWatch-metrics analog,
         # main.tf:502 publish_cloudwatch_metrics_enabled)
@@ -133,9 +169,11 @@ class Engine:
         }
         # L7 result-reuse cache: (principal, RAW sql) -> (query_id,
         # completed_at, governance_fingerprint, {base table: storage
-        # fingerprint}). Raw-SQL keying is safe ONLY because a hit also
-        # requires the governance fingerprint to be unchanged since the
-        # producing run (whose rewrite enforced the then-current grants).
+        # fingerprint}, result frame). Raw-SQL keying is safe ONLY
+        # because a hit also requires the governance fingerprint to be
+        # unchanged since the producing run (whose rewrite enforced the
+        # then-current grants). The entry owns the producer's frame, so
+        # a hit does not depend on anything else still pinning it.
         self._reuse_cache: dict[tuple, tuple] = {}
 
     # ------------------------------------------------------------- L1-L4
@@ -147,9 +185,13 @@ class Engine:
     ) -> str:
         """L1 — submit a query; returns its query id (validate.sh:74-87).
 
+        A successful result stays pinned for :meth:`results` /
+        :meth:`results_page` until :meth:`cleanup_results`.
         ``reuse_max_age`` (seconds) opts into L7 result reuse — the
         Athena ``ResultReuseByAgeConfiguration`` analog."""
-        qe = self._execute(sql, principal, reuse_max_age=reuse_max_age)
+        qe, df = self._execute(sql, principal, reuse_max_age=reuse_max_age)
+        if df is not None:
+            self._results[qe.query_id] = df
         return qe.query_id
 
     def status(self, query_id: str) -> QueryState:
@@ -184,18 +226,32 @@ class Engine:
         ADVICE), while the checkpoint is bit-exact and every page sees
         the same frozen row order. The CSV stays what it is in Athena:
         the durable result artifact (S5), not the paging source.
+
+        Only a :meth:`submit`-ted result can be fetched: a failed query
+        raises :class:`QueryFailedError`, and a query run through
+        :meth:`sql` (whose caller owns the frame) or already cleaned up
+        raises :class:`ResultNotRetainedError`.
         """
         qe = self.executions[query_id]
-        if qe.state is not QueryState.SUCCEEDED or qe.result is None:
-            raise RuntimeError(
+        if qe.state is not QueryState.SUCCEEDED:
+            raise QueryFailedError(
                 f"query {query_id} is {qe.state.value}: {qe.state_change_reason}"
             )
-        if qe.page_source is None:
-            qe.page_source = qe.result.localCheckpoint(eager=False)
+        page_source = self._page_sources.get(query_id)
+        if page_source is None:
+            result = self._results.get(query_id)
+            if result is None:
+                raise ResultNotRetainedError(
+                    f"query {query_id} has no retained result: sql() hands "
+                    "its frame to the caller; use submit() to fetch rows "
+                    "by query id (until cleanup_results)"
+                )
+            page_source = result.localCheckpoint(eager=False)
+            self._page_sources[query_id] = page_source
         offset = int(next_token) if next_token is not None else 0
         # fetch one extra row to learn whether another page exists without
         # a separate count() job over the full result
-        rows = qe.page_source.offset(offset).limit(max_rows + 1).collect()
+        rows = page_source.offset(offset).limit(max_rows + 1).collect()
         has_more = len(rows) > max_rows
         rows = rows[:max_rows]
         self.metrics["rows_fetched"] += len(rows)
@@ -204,8 +260,9 @@ class Engine:
     def cleanup_results(self, query_id: str | None = None) -> int:
         """Destroy-time cleanup analog (main.tf:518-530: the results-bucket
         destroy provisioner): delete persisted result CSVs for one query
-        (or all), returning the number of result directories removed.
-        Execution records stay for audit; only their files go."""
+        (or all), returning the number of result directories removed,
+        and release the pinned result frames and their page sources.
+        Execution records stay for audit; only their results go."""
         import shutil
 
         removed = 0
@@ -213,6 +270,8 @@ class Engine:
             [self.executions[query_id]] if query_id else list(self.executions.values())
         )
         for qe in targets:
+            self._results.pop(qe.query_id, None)
+            self._page_sources.pop(qe.query_id, None)
             if qe.results_path is not None:
                 # L7 reuse shares the producer's CSV path. A TARGETED
                 # cleanup of a reused execution only detaches its own
@@ -365,17 +424,15 @@ class Engine:
                 as_of_versions[q] = branch_head(table.location, brname)[
                     "version"
                 ]
-        qe = self._execute(
+        _qe, df = self._execute_frame(
             sql,
             principal,
-            raise_on_error=True,
             reuse_max_age=reuse_max_age,
             as_of_versions=as_of_versions,
             use_mvs=use_mvs and not as_of_versions,
             mv_allow_stale=mv_allow_stale,
         )
-        assert qe.result is not None
-        return qe.result
+        return df
 
     def sql_script(
         self,
@@ -555,6 +612,19 @@ class Engine:
             )
 
     # ---------------------------------------------------------- internals
+    def _execute_frame(
+        self, sql: str, principal: Principal | str | None, **kwargs
+    ) -> tuple[QueryExecution, DataFrame]:
+        """:meth:`_execute` for callers that consume the result: a
+        failure raises, so the frame is always there."""
+        qe, df = self._execute(sql, principal, raise_on_error=True, **kwargs)
+        if df is None:
+            raise QueryFailedError(
+                f"query {qe.query_id} is {qe.state.value}: "
+                f"{qe.state_change_reason}"
+            )
+        return qe, df
+
     def _execute(
         self,
         sql: str,
@@ -564,8 +634,13 @@ class Engine:
         as_of_versions: dict[str, int] | None = None,
         use_mvs: bool = False,
         mv_allow_stale: bool = False,
-    ) -> QueryExecution:
-        """``reuse_max_age`` (seconds) enables L7 result reuse — Athena's
+    ) -> tuple[QueryExecution, DataFrame | None]:
+        """Run one governed query or statement, record its metadata in
+        ``executions`` and return it with the result frame (None when
+        it did not succeed). The frame is not retained here: the
+        caller owns it.
+
+        ``reuse_max_age`` (seconds) enables L7 result reuse — Athena's
         ``ResultReuseByAgeConfiguration`` analog, made strictly safer:
 
         - a hit requires the catalog's ``governance_fingerprint`` to be
@@ -618,7 +693,7 @@ class Engine:
             )
             if raise_on_error:
                 raise
-            return qe
+            return qe, None
         # a versioned read must never hit (or seed) an unversioned
         # cache entry — the snapshot is part of the query identity;
         # likewise the MV-rewrite opt-ins: an allow-stale run may cache
@@ -636,7 +711,7 @@ class Engine:
         if stmt is None and reuse_max_age is not None:
             hit = self._reuse_cache.get(reuse_key)
             if hit is not None:
-                src_id, done_at, gov_fp, table_fps = hit
+                src_id, done_at, gov_fp, table_fps, cached = hit
                 # valid only while (a) inside the age window, (b) NO
                 # governance metadata changed since the producing run
                 # (whose rewrite enforced the then-current grants), and
@@ -650,8 +725,7 @@ class Engine:
                     )
                 )
                 src = self.executions.get(src_id)
-                if fresh and src is not None and src.result is not None:
-                    qe.result = src.result
+                if fresh and src is not None:
                     qe.results_path = src.results_path
                     qe.tables = list(src.tables)
                     qe.filters_applied = list(src.filters_applied)
@@ -666,7 +740,7 @@ class Engine:
                         qe.filters_applied,
                         f"REUSED:{src_id}",
                     )
-                    return qe
+                    return qe, cached
         created_views: list[str] = []
         try:
             if stmt is not None:
@@ -712,7 +786,6 @@ class Engine:
                 finally:
                     for v in created_views:
                         self.spark.catalog.dropTempView(v)
-            qe.result = df
             if stmt is None:
                 # workgroup bytes-scanned enforcement. Statements that
                 # READ governed data at scale are billed at their
@@ -752,6 +825,7 @@ class Engine:
                     _time.time(),
                     self.catalog.governance_fingerprint(),
                     self._storage_fingerprints(touched),
+                    df,
                 )
             self.catalog.audit.record(
                 name or "<anonymous>", sql, touched, qe.filters_applied, "SUCCEEDED"
@@ -779,7 +853,8 @@ class Engine:
             )
             if raise_on_error:
                 raise
-        return qe
+            return qe, None
+        return qe, df
 
     # ----------------------------------------- statement dispatch (r10)
     def _run_statement(self, stmt, principal, qe: QueryExecution) -> DataFrame:
@@ -1476,11 +1551,10 @@ class Engine:
             # re-rendered through the escaping literal writer — a
             # parameter containing quotes/keywords stays one literal
             filled = _fill_params(template, list(stmt.params))
-            inner = self._execute(filled, principal, raise_on_error=True)
+            inner, df = self._execute_frame(filled, principal)
             qe.tables = list(inner.tables)
             qe.filters_applied = list(inner.filters_applied)
-            assert inner.result is not None
-            return inner.result
+            return df
 
         if isinstance(stmt, ExplainStatement):
             if stmt.analyze:
@@ -2900,9 +2974,8 @@ class Engine:
         from .catalog import TableDef
         from .governance import ALL
 
-        qe = self._execute(sql, principal, raise_on_error=True)
-        assert qe.result is not None
-        writer = qe.result.write.mode("overwrite").option("compression", "snappy")
+        qe, df = self._execute_frame(sql, principal)
+        writer = df.write.mode("overwrite").option("compression", "snappy")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(location)
@@ -2911,7 +2984,7 @@ class Engine:
                 database=database,
                 name=table,
                 location=location,
-                schema=qe.result.schema,
+                schema=df.schema,
                 partition_keys=tuple(partition_by or ()),
             )
         )
@@ -4429,11 +4502,10 @@ class Engine:
             schema = T.StructType(
                 [T.StructField(alias or "count(1)", T.LongType(), False)]
             )
-            # _local_df: one partition, not 32 slices — the caller's
-            # .first() must not pay a take ramp over empty partitions
-            # (round-14 bisect of the lake_multi_table_publish
-            # elevation: the metadata-served count cost MORE jobs than
-            # the scan it replaced)
+            # _local_df: a LocalRelation, so the caller's .first()
+            # runs no job at all (round-14 bisect of the
+            # lake_multi_table_publish elevation: a parallelized count
+            # frame cost MORE jobs than the scan it replaced)
             return _local_df(self.spark, [(int(info["rows"]),)], schema)
         # per-partition: decode hive dir names back to typed values;
         # anything outside the decodable envelope (null partitions,
@@ -4512,7 +4584,7 @@ class Engine:
             vals = dict(zip(group_by, k))
             vals[alias] = v
             rows.append(tuple(vals[c] for c in order))
-        # _local_df for the same take-ramp reason as the bare form
+        # _local_df for the same no-job reason as the bare form
         # above: the group count is O(#partitions of the table), still
         # a driver-local list
         df = _local_df(self.spark, rows, out_schema)
@@ -5432,5 +5504,7 @@ __all__ = [
     "PermissionDeniedError",
     "PrincipalSession",
     "QueryExecution",
+    "QueryFailedError",
     "QueryState",
+    "ResultNotRetainedError",
 ]

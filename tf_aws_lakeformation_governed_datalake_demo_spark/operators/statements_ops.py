@@ -786,10 +786,9 @@ def sql_count_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     "min/max skipping stats); audit carries COUNT_STATS so reviewers "
     "see stats-served vs scanned."""
     eng, _lake = _governed_docs(spark, sf_dir, "sqlcnt_")
-    qe = eng._execute(
-        "SELECT count(*) AS n_docs FROM db.docs", "ops", raise_on_error=True
+    qe, out = eng._execute_frame(
+        "SELECT count(*) AS n_docs FROM db.docs", "ops"
     )
-    out = qe.result
     assert not out.inputFiles(), "bare count must plan zero files"
     assert "COUNT_STATS:db.docs" in qe.filters_applied
     return out
